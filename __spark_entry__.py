@@ -4,6 +4,13 @@ Thin views over the engine's declared-query registry
 (``spark_ml_pipelines_example_spark.queries.registry``): every implemented
 operator from SURVEY.md §2 registers a ``(spark, sf_dir) -> DataFrame``
 callable plus (when SQL-expressible) its DuckDB oracle twin.
+
+The driver hash-checks only the first ~50 entries per round, so the views
+list queries in oracle-window order (``queries/oracle_window.py``): code
+no driver row has checked yet first, then code changed since its last
+green row, then the oldest certification. The order is computed from the
+code and the committed ledger ``tools/oracle_ledger.json``; no list of
+names is kept by hand.
 """
 
 from __future__ import annotations
@@ -12,9 +19,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_ml_pipelines_example_spark.queries import oracle_window
 from spark_ml_pipelines_example_spark.queries.registry import load_all
 
-_REGISTRY = load_all()
+_REGISTRY = oracle_window.order(load_all())
 
 
 def entry(spark: SparkSession) -> DataFrame:

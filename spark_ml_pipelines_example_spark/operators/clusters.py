@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..queries import dedup as _dedup  # noqa: F401 — registers the pair oracle
+from ..queries import dedup as _dedup  # the pair query and its oracle
 from ..queries.registry import REGISTRY, query
 
 MAX_ROUNDS = 20
@@ -152,9 +152,7 @@ def q_dedup_clusters(spark, sf_dir):
     (the q_dedup_exact winner rule). The iterative engine path is
     hash-checked against a recursive-CTE oracle (min reachable label);
     a driver-side union-find additionally cross-checks it in tests."""
-    from ..queries.registry import REGISTRY
-
-    pairs = REGISTRY["q_dedup_ngram_jaccard"].fn(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _dedup.q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     comps = connected_components(pairs)
     return comps.groupBy("comp").agg(
         F.count("*").alias("n_docs"),

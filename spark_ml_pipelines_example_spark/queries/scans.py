@@ -915,18 +915,18 @@ def q_scan_time_travel(spark, sf_dir):
     # per-file partials; per-version totals combine the partials on the
     # driver — integer sums are order-free, so the totals are the exact
     # ints the per-version aggregates produced (guarded below against
-    # the int64 wrap Spark's own sum would take). The partial frame is
-    # one row per live data file, i.e. manifest-bounded.
-    per_file = (
-        spark.read.parquet(*all_files)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
-        .collect()
-    )
-    stats: dict[str, tuple[int, int | None]] = {}
-    for r in per_file:
-        p = unquote(urlparse(r["f"]).path)
-        stats[p] = (int(r["n"]), None if r["s"] is None else int(r["s"]))
+    # the int64 wrap Spark's own sum would take).
+    stats = _file_partials(spark, all_files)
+    # every live file's partial must count exactly its footer's rows: a
+    # file with rows but no partial (e.g. a path that does not round-trip
+    # through input_file_name) would otherwise add nothing, silently
+    import pyarrow.parquet as pq
+
+    if any(
+        stats.get(f, (0, None))[0] != pq.ParquetFile(f).metadata.num_rows
+        for f in all_files
+    ):
+        return _time_travel_distributed(spark, base, versions)
     rows = []
     for v, files in zip(versions, msets):
         n_v, s_v, any_s = 0, 0, False
@@ -948,9 +948,25 @@ _SNAPSHOT_FILES_CAP = 100_000  # manifests are KB-scale JSON by contract
 _I64_MAX_SNAP = (1 << 63) - 1
 
 
+def _file_partials(spark, files) -> dict[str, tuple[int, int | None]]:
+    """path -> (row count, cents sum) for each data file, from one scan
+    (one row per live file, i.e. manifest-bounded)."""
+    per_file = (
+        spark.read.parquet(*files)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
+        .collect()
+    )
+    return {
+        unquote(urlparse(r["f"]).path): (int(r["n"]), None if r["s"] is None else int(r["s"]))
+        for r in per_file
+    }
+
+
 def _time_travel_distributed(spark, base, versions):
     """The verbatim per-version union-of-aggregates form — the fallback
-    when the manifest is not driver-sized or a sum leaves int64 range."""
+    when the manifest is not driver-sized, a file's partial does not
+    match its footer row count, or a sum leaves int64 range."""
     from ..sources.snapshots import read_version
 
     out = None

@@ -1431,17 +1431,15 @@ def streaming_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type totals recurrence on the v1 arbitrary-stateful surface
-    (``applyInPandasWithState``, no timeouts): the per-user map
-    event_type -> (n, cents) rides as three parallel ARRAYS in the
-    packed state tuple — the v1 idiom state-v2's MapState handle
-    replaces with per-entry KV storage. Same emissions as the
-    transformWithState path."""
+def _per_type_v1():
+    """The ``applyInPandasWithState`` body of ``_tws_map_state_v1``. A
+    factory rather than a module-level function, so a test can call the
+    processor while it still ships to the Python workers by value. NULL
+    ``event_type`` rows are skipped, as the transformWithState path's
+    pandas groupby skips NULL keys."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def per_type(key, pdfs, state: GroupState):
+    def per_type(key, pdfs, state):
         user_id = key[0]
         if state.exists:
             ets, ns, cs = state.get
@@ -1466,6 +1464,8 @@ def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
                     touched.add(et)
                 continue
             for et, c in zip(pdf["event_type"].to_numpy(), cents_a):
+                if et is None:
+                    continue
                 cur = m.setdefault(et, [0, 0])
                 cur[0] += 1
                 cur[1] += int(c)
@@ -1484,6 +1484,18 @@ def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
+    return per_type
+
+
+def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-type totals recurrence on the v1 arbitrary-stateful surface
+    (``applyInPandasWithState``, no timeouts): the per-user map
+    event_type -> (n, cents) rides as three parallel ARRAYS in the
+    packed state tuple — the v1 idiom state-v2's MapState handle
+    replaces with per-entry KV storage. Same emissions as the
+    transformWithState path."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     ev = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("user_id") != SENTINEL_USER)
@@ -1494,7 +1506,7 @@ def _tws_map_state_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = ev.groupBy("user_id").applyInPandasWithState(
-        per_type,
+        _per_type_v1(),
         outputStructType="user_id long, event_type string, n_events long, sum_cents long",
         stateStructType="ets array<string>, ns array<long>, cents array<long>",
         outputMode="update",

@@ -1,139 +1,254 @@
-"""The driver-window auto-rotation (queries/registry.py
-_rotate_for_driver) must keep its contract: the front of the registry is
-always never-driver-checked SQL-oracled queries, nothing is lost or
-duplicated, and the ordering is deterministic."""
+"""The oracle-window order (queries/oracle_window.py) must keep its
+contract: closures follow every path into package code, fingerprints are
+reproducible across processes, the ledger only records green rows, and
+the front of ``__spark_entry__.queries()`` is the SQL-oracled code that
+most needs a driver row."""
 
 from __future__ import annotations
 
-from spark_ml_pipelines_example_spark.queries.registry import (
-    _FORCE_RECHECK,
-    _WINDOW_PIN,
-    REGISTRY,
-    _driver_checked_queries,
-    _force_recheck_pending,
-    load_all,
+import ast
+import dataclasses
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from spark_ml_pipelines_example_spark.queries import oracle_window as ow
+from spark_ml_pipelines_example_spark.queries.registry import REGISTRY, load_all
+
+ROOT = Path(__file__).resolve().parents[1]
+
+# the rewrites the round-12 driver window never checked
+R12_UNCERTIFIED = (
+    "q_scan_table_history",
+    "q_scan_time_travel",
+    "q_text_kneser_ney",
+    "q_text_bigram_lm",
+    "q_text_pmi_collocations",
+    "q_stream_milestones",
+    "q_stream_tws_map_state",
 )
 
 
-def test_rotation_fronts_never_checked_sql():
-    full = load_all()
-    checked = _driver_checked_queries() - _force_recheck_pending()
-    names = list(full)
-    n_never_sql = sum(
-        1
-        for n, s in full.items()
-        if n not in checked and (s.oracle is not None or n in _WINDOW_PIN)
+@pytest.fixture(scope="module")
+def reg():
+    return load_all()
+
+
+@pytest.fixture(scope="module")
+def ledger():
+    return ow.load_ledger()
+
+
+@pytest.fixture(scope="module")
+def current(reg):
+    return ow.closures(reg)
+
+
+@pytest.fixture(scope="module")
+def status(current, ledger):
+    return ow.status(current, ledger)
+
+
+@pytest.fixture(scope="module")
+def ordered(reg):
+    return list(ow.order(reg))
+
+
+def test_closure_follows_local_imports_and_module_refs(reg):
+    # q_stream_milestones reaches the v1 processor only through a
+    # function-local `from ..streaming.jobs import ...`
+    assert "streaming.jobs._spend_milestones_v1" in ow.closure(reg["q_stream_milestones"])["fns"]
+    # q_win_ranking reaches the table loader through queries._util.t
+    fns = ow.closure(reg["q_win_ranking"])["fns"]
+    assert "sources.io.load_table" in fns and "queries._util.t" in fns
+    # q_dedup_clusters builds its pair graph by calling the ngram-Jaccard
+    # query, so that query's code and its loader are in its closure
+    fns = ow.closure(reg["q_dedup_clusters"])["fns"]
+    assert "queries.dedup.q_dedup_ngram_jaccard" in fns and "sources.io.load_table" in fns
+
+
+def test_failed_local_import_reaches_nothing():
+    """A package import that fails (say, a missing optional dependency)
+    binds nothing: it must not break the walk, nor the entry import."""
+    node = ast.parse("from .no_such_module import x").body[0]
+    assert ow._import(node, "spark_ml_pipelines_example_spark.queries") == {}
+
+
+def test_closures_ignore_runtime_state(reg, current):
+    """Module globals hash by the source that assigns them, never by their
+    value: a filled runtime cache or a reassigned global moves no digest,
+    so the order does not depend on what already ran in the process."""
+    from spark_ml_pipelines_example_spark.operators import _cache, similarity
+    from spark_ml_pipelines_example_spark.sources import io
+
+    read = {k for c in current.values() for k in c["consts"]}
+    assert {"operators._cache._TRACKED", "operators.similarity._IVF_FIT",
+            "sources.io._SCRATCH_ROOT"} <= read
+    sentinel, root = object(), io._SCRATCH_ROOT
+    try:
+        _cache._TRACKED.append(sentinel)
+        similarity._IVF_FIT["probe"] = (sentinel, [])
+        io._SCRATCH_ROOT = root + "_elsewhere"
+        assert ow.closures(reg) == current
+    finally:
+        _cache._TRACKED.remove(sentinel)
+        similarity._IVF_FIT.pop("probe")
+        io._SCRATCH_ROOT = root
+
+
+def test_fingerprint_tracks_oracle_text(reg):
+    spec = reg["q_tpch_q1"]
+    cur = ow.closure(spec)
+    assert ow.closure(dataclasses.replace(spec)) == cur
+    edited = ow.closure(dataclasses.replace(spec, oracle=spec.oracle + " "))
+    assert edited["oracle"] != cur["oracle"]
+    assert {k: v for k, v in edited.items() if k != "oracle"} == {
+        k: v for k, v in cur.items() if k != "oracle"
+    }
+    assert ow.closure(dataclasses.replace(spec, oracle=None))["oracle"] == "rows-only"
+
+
+def test_fingerprints_independent_of_hash_seed():
+    """Functions and globals hash by their source, never by a repr, so no
+    digest may move with PYTHONHASHSEED (q_dedup_clusters reads a module
+    dict whose repr would otherwise leak set order)."""
+    code = (
+        "import hashlib, json\n"
+        "from spark_ml_pipelines_example_spark.queries import oracle_window as ow\n"
+        "from spark_ml_pipelines_example_spark.queries.registry import load_all\n"
+        "c = ow.closures(load_all())\n"
+        "print(hashlib.sha1(json.dumps(c, sort_keys=True).encode()).hexdigest())\n"
     )
-    window = names[: min(50, n_never_sql)]
-    assert all(n not in checked for n in window), "window wastes a checked slot"
-    # rows-only entries may appear in the window only via the explicit pin
-    assert all(
-        full[n].oracle is not None or n in _WINDOW_PIN for n in window
-    ), "unpinned rows-only in window"
+    out = []
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        out.append(
+            subprocess.run(
+                [sys.executable, "-c", code], cwd=ROOT, env=env,
+                capture_output=True, text=True, check=True,
+            ).stdout
+        )
+    assert out[0] == out[1] and len(out[0].strip()) == 40
 
 
-def test_window_pin_lands_in_window():
-    """VERDICT r4 #1: every pinned query that still lacks a valid driver
-    row must land inside the ~50-query driver window."""
-    full = load_all()
-    checked = _driver_checked_queries() - _force_recheck_pending()
-    names = list(full)
-    unpinned_needed = [n for n in _WINDOW_PIN if n in full and n not in checked]
-    window = set(names[:50])
-    missing = [n for n in unpinned_needed if n not in window]
-    assert not missing, f"pinned-but-outside-window: {missing}"
+def test_ledger_rounds_hold_green_rows(ledger):
+    """Every ledger entry names a round whose committed artifact holds a
+    green row for that query: the ledger records checks, never hopes."""
+    assert ledger
+    artifacts: dict[int, dict] = {}
+    for name, entry in ledger.items():
+        rnd = entry["round"]
+        if rnd not in artifacts:
+            artifacts[rnd] = json.loads((ROOT / f"CORRECTNESS_r{rnd:02d}.json").read_text())
+        assert ow.green(artifacts[rnd].get(name)), (name, rnd)
+        assert set(entry) == {"round", "oracle", "fns", "consts"}, name
 
 
-def test_rotation_is_a_permutation():
-    full = load_all()
-    assert set(full) == set(REGISTRY)
-    assert len(full) == len(REGISTRY)
+def test_changed_digest_is_stale_not_tier0(reg, current):
+    """A ledger whose rows saw an older load_table makes every query that
+    reaches it stale; while one entry certifies today's load_table the
+    code is not uncertified, so none is tier 0. Once no entry holds it,
+    every reacher is tier 0."""
+    synthetic = json.loads(json.dumps({n: {"round": 12, **c} for n, c in current.items()}))
+    key = "sources.io.load_table"
+    reachers = {n for n, e in synthetic.items() if key in e["fns"]}
+    witness = "q_win_ranking"
+    assert witness in reachers and len(reachers) < len(reg)
+    for n in reachers - {witness}:
+        synthetic[n]["fns"][key] = "0" * 16
+    st = ow.status(current, synthetic)
+    assert all(st[n] == (ow.STALE, 12) for n in reachers - {witness})
+    assert st[witness] == (ow.FRESH, 12)
+    assert all(st[n] == (ow.FRESH, 12) for n in set(reg) - reachers)
+
+    synthetic[witness]["fns"][key] = "0" * 16
+    st = ow.status(current, synthetic)
+    assert all(st[n][0] == ow.TIER0 for n in reachers)
+    # an edited oracle alone is stale, and a query with no entry is tier 0
+    other = next(n for n in sorted(set(reg) - reachers) if reg[n].oracle)
+    synthetic[other]["oracle"] = "0" * 16
+    assert ow.status(current, synthetic)[other] == (ow.STALE, 12)
+    del synthetic[other]
+    assert ow.status(current, synthetic)[other] == (ow.TIER0, 0)
 
 
-def test_rotation_deterministic():
-    assert list(load_all()) == list(load_all())
+def test_rotation_is_a_permutation(ordered):
+    assert set(ordered) == set(REGISTRY)
+    assert len(ordered) == len(REGISTRY)
 
 
-def test_checked_set_reads_artifacts():
-    checked = _driver_checked_queries()
-    # rounds 1+2 recorded 96 distinct rows; 3 of those were rows-only
-    # checks of queries that have since gained SQL oracles (they must
-    # re-front), and future rounds only add
-    assert len(checked) >= 93
+def test_rotation_deterministic(reg, ordered):
+    # a fresh walk in registration order reversed gives the same order
+    assert list(ow.order(dict(reversed(list(reg.items()))))) == ordered
 
 
-def test_checked_requires_valid_row_and_fresh_oracle():
-    """ADVICE r3 (medium): an artifact KEY alone must not count as
-    checked. Errored rows never certify; a rows-only row stops
-    certifying once the query gains a SQL oracle; a SQL row stops
-    certifying if the declared oracle no longer matches the recorded
-    fingerprint."""
-    from spark_ml_pipelines_example_spark.queries.registry import (
-        _checked_fingerprints,
-        oracle_fingerprint,
-    )
-
-    load_all()
-    checked = _driver_checked_queries()
-    fps = _checked_fingerprints()
-    # q_dedup_minhash / q_dedup_simhash / q_pack_ffd: their r1/r2 rows
-    # were 'no_oracle' class and did NOT certify through rounds 3-4; the
-    # r5 driver window recorded fresh hash-match rows against the current
-    # oracles, so they certify now — but ONLY because the recorded
-    # fingerprint matches the declared oracle today.
-    for name in ("q_dedup_minhash", "q_dedup_simhash", "q_pack_ffd"):
-        assert REGISTRY[name].oracle is not None
-        assert fps.get(name) == oracle_fingerprint(REGISTRY[name])
-        assert name in checked, f"{name} fresh r5 hash row should certify"
-    # and the gate itself: any checked SQL-oracled query must carry a
-    # matching fingerprint — a drifted oracle would silently launder an
-    # old row otherwise.
-    for name in checked:
-        spec = REGISTRY[name]
-        if spec.oracle is not None:
-            assert fps.get(name) == oracle_fingerprint(spec), name
+def test_rotation_fronts_never_checked_sql(reg, status, ordered):
+    """Every SQL-oracled query that reaches code no driver row has
+    checked comes before every other query."""
+    tier0 = [n for n in ordered if reg[n].oracle and status[n][0] == ow.TIER0]
+    assert ordered[: len(tier0)] == tier0
 
 
-def test_fingerprint_tracks_oracle_text():
-    from spark_ml_pipelines_example_spark.queries.registry import oracle_fingerprint
-
-    spec = REGISTRY["q_tpch_q1"]
-    fp = oracle_fingerprint(spec)
-    assert fp != "rows-only" and len(fp) == 32
-    # same oracle → same fingerprint; different oracle → different
-    import dataclasses
-
-    assert oracle_fingerprint(dataclasses.replace(spec)) == fp
-    assert oracle_fingerprint(dataclasses.replace(spec, oracle=spec.oracle + " ")) != fp
-    assert oracle_fingerprint(dataclasses.replace(spec, oracle=None)) == "rows-only"
+def test_recert_rotation_selects_oldest_vintage_sql_only(reg, status, ordered):
+    """Along the order: SQL-oracled before rows-only, then tier 0, stale,
+    fresh, then oldest ledger round, then name."""
+    keys = [(reg[n].oracle is None, *status[n], n) for n in ordered]
+    assert keys == sorted(keys)
 
 
-def test_force_recheck_retires_on_fresh_row(tmp_path):
-    """A fresh (round >= 5) good row retires the force-recheck — the trio
-    must not re-front forever once the driver re-verifies them; pre-r5
-    rows and errored rows must NOT retire it."""
-    import json
+def test_recert_rotation_fills_driver_window(reg, status, ordered):
+    """The ~50-name driver window holds only SQL-oracled queries (a
+    rows-only row hashes nothing), and no fresh name takes a slot while a
+    stale or tier-0 SQL name waits outside it."""
+    window = ordered[:50]
+    assert all(reg[n].oracle is not None for n in window)
+    waiting = [n for n in ordered[50:] if reg[n].oracle and status[n][0] != ow.FRESH]
+    if waiting:
+        assert all(status[n][0] != ow.FRESH for n in window)
 
-    # no artifacts at all → everything still pending
-    assert _force_recheck_pending(tmp_path) == _FORCE_RECHECK
 
-    # a pre-r5 row does not retire (that IS the stale row)
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"q_ml_pca": {"err": "no_oracle", "spark_rows": 8}})
-    )
-    assert _force_recheck_pending(tmp_path) == _FORCE_RECHECK
+def test_uncertified_rewrites_land_in_window(status, ordered):
+    """The entry module applies the order, and each round-12 rewrite the
+    driver never checked sits in its first 50 names until a ledger row
+    certifies its current code."""
+    import __spark_entry__
 
-    # an errored r5 row does not retire
-    (tmp_path / "CORRECTNESS_r05.json").write_text(
-        json.dumps({"q_ml_pca": {"err": "Traceback ...", "spark_rows": None}})
-    )
-    assert _force_recheck_pending(tmp_path) == _FORCE_RECHECK
+    assert list(__spark_entry__.queries()) == ordered
+    window = ordered[:50]
+    missing = [
+        n for n in R12_UNCERTIFIED if n not in window and status[n][0] != ow.FRESH
+    ]
+    assert not missing, f"uncertified rewrites outside the window: {missing}"
 
-    # a good r5 rows-only row retires exactly that name
-    (tmp_path / "CORRECTNESS_r05.json").write_text(
-        json.dumps({"q_ml_pca": {"err": "no_oracle", "spark_rows": 8}})
-    )
-    assert _force_recheck_pending(tmp_path) == _FORCE_RECHECK - {"q_ml_pca"}
+
+def test_recert_rotation_advances_on_fresh_row(reg):
+    """A fresh row for one of two equally old names moves it behind the
+    other; recording it in a newer round is all it takes. An errored,
+    mismatched or empty row certifies nothing."""
+    a, b = "q_agg_argmax", "q_agg_bool"
+    sub = {n: reg[n] for n in (a, b)}
+    current = ow.closures(sub)
+    ok = {"hash_match": True, "err": None}
+    ledger: dict = {}
+    assert ow.record(ledger, current, {a: ok, b: ok}, 1) == 2
+    assert list(ow.order(sub, ledger)) == [a, b]  # same round -> name
+    for row in (
+        {"hash_match": False, "err": "Traceback ..."},
+        {"hash_match": True, "err": "x"},
+        {"hash_match": False, "err": None},
+        {"err": "no_oracle", "spark_rows": None},
+        None,
+    ):
+        assert ow.record(ledger, current, {a: row}, 10) == 0, row
+    assert ledger[a]["round"] == 1
+    assert ow.record(ledger, current, {a: ok}, 10) == 1
+    assert list(ow.order(sub, ledger)) == [b, a]
+    # a rows-only run that returned rows is green too
+    assert ow.record(ledger, current, {b: {"err": "no_oracle", "spark_rows": 3}}, 11) == 1
 
 
 def test_rows_only_row_contract_complete():
@@ -163,117 +278,3 @@ def test_rows_only_row_contract_complete():
             ):
                 lo, hi = ROWS_ONLY_ROW_CONTRACT[name]
                 assert lo <= row["spark_rows"] <= hi, (name, p.name, row)
-
-
-def test_recert_rotation_selects_oldest_vintage_sql_only():
-    """VERDICT r9 #1: with the ledger closed, the window budget left
-    after the pins re-fronts the OLDEST-vintage certified SQL-oracled
-    queries, oldest-first. No selected name may be younger than an
-    unselected eligible one, rows-only names never rotate, and the
-    budget tops the window up to ~50 with the pins."""
-    from spark_ml_pipelines_example_spark.queries.registry import (
-        _RECERT_WINDOW,
-        _certified_vintage,
-        _recert_rotation_names,
-    )
-
-    rec = _recert_rotation_names()
-    vintage = _certified_vintage()
-    # ADVICE r10 #3: the recert budget leaves room for the pins AND any
-    # never-checked (unpinned) names, which outrank the recert block —
-    # a new query must never be pushed past the ~50-entry driver window.
-    from spark_ml_pipelines_example_spark.queries.registry import (
-        _driver_checked_queries,
-        _force_recheck_pending,
-    )
-
-    fresh = _driver_checked_queries() - _force_recheck_pending()
-    never = sum(1 for n in REGISTRY if n not in fresh and n not in _WINDOW_PIN)
-    assert len(rec) == min(
-        max(0, _RECERT_WINDOW - len(_WINDOW_PIN) - never),
-        sum(1 for n in vintage if REGISTRY[n].oracle is not None),
-    )
-    assert all(REGISTRY[n].oracle is not None for n in rec)
-    # oldest-first, name tie-break
-    keys = [(vintage[n], n) for n in rec]
-    assert keys == sorted(keys)
-    # nothing unselected is older than anything selected
-    unselected = [
-        v
-        for n, v in vintage.items()
-        if n not in rec and REGISTRY[n].oracle is not None and n not in _WINDOW_PIN
-    ]
-    if rec and unselected:
-        assert max(vintage[n] for n in rec) <= min(unselected)
-
-
-def test_recert_rotation_fills_driver_window():
-    """The rotated registry's first ~50 names must be exactly the pins
-    (those that exist and still need a row) + never-checked newcomers +
-    the recert selection — the driver's budget lands on re-certification,
-    not on the already-fresh regression tail."""
-    from spark_ml_pipelines_example_spark.queries.registry import (
-        _recert_rotation_names,
-    )
-
-    full = load_all()
-    rec = _recert_rotation_names()
-    # r12: pinned names force-front even when they hold a valid row (an
-    # optimization round's rewrites re-enter the window) — mirror
-    # _rotate_for_driver's checked-set definition.
-    checked = (
-        _driver_checked_queries()
-        - _force_recheck_pending()
-        - set(rec)
-        - set(_WINDOW_PIN)
-    )
-    n_window = sum(1 for n in full if n not in checked)
-    front = list(full)[:n_window]
-    # every window slot needs a fresh row (pin, newcomer, or recert)
-    assert all(n not in checked for n in front)
-    assert set(rec) <= set(front)
-    # the recert names ride in their declared (oldest-first) order
-    in_front = [n for n in front if n in rec]
-    assert in_front == list(rec)
-
-
-def test_recert_rotation_advances_on_fresh_row(tmp_path):
-    """Self-maintenance: once a round's artifact records a fresh green
-    row for a re-fronted name, its vintage advances and the next
-    selection moves on to the next-oldest automatically."""
-    import json
-
-    from spark_ml_pipelines_example_spark.queries.registry import (
-        _certified_vintage,
-        _checked_fingerprints,
-        _recert_rotation_names,
-    )
-
-    fps = _checked_fingerprints()
-    # two real SQL-oracled names with committed fingerprints
-    a, b = "q_agg_argmax", "q_agg_bool"
-    assert fps.get(a) and fps.get(b)
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(
-            {
-                a: {"hash_match": True, "err": None},
-                b: {"hash_match": True, "err": None},
-            }
-        )
-    )
-    rec = _recert_rotation_names(tmp_path)
-    assert rec[:2] == (a, b)  # same vintage → name order
-    v = _certified_vintage(tmp_path)
-    assert v[a] == 1 and v[b] == 1
-    # a fresh r10 row for `a` pushes it behind `b`
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({a: {"hash_match": True, "err": None}})
-    )
-    rec2 = _recert_rotation_names(tmp_path)
-    assert rec2[:2] == (b, a)
-    # an errored r10 row must NOT advance the vintage
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({a: {"hash_match": False, "err": "Traceback ..."}})
-    )
-    v3 = _certified_vintage(tmp_path)
-    assert v3[a] == 1

@@ -178,6 +178,34 @@ def test_snapshot_queries_match_distributed_forms(spark, sf_dir):
     assert th_new and th_new == th_old
 
 
+def test_time_travel_missing_partial_falls_back(spark, sf_dir, monkeypatch):
+    """A live file with footer rows but no per-file partial must not add
+    (0, None) silently — the query falls back to the
+    per-version distributed form and returns its rows."""
+    from spark_ml_pipelines_example_spark.queries import scans
+    from spark_ml_pipelines_example_spark.queries.registry import load_all
+
+    real_partials, real_distributed = scans._file_partials, scans._time_travel_distributed
+    dropped, fell_back = [], []
+
+    def drop_one(spark, files):
+        stats = real_partials(spark, files)
+        dropped.append(sorted(stats)[0])
+        del stats[dropped[0]]
+        return stats
+
+    def distributed(*args):
+        fell_back.append(True)
+        return real_distributed(*args)
+
+    monkeypatch.setattr(scans, "_file_partials", drop_one)
+    monkeypatch.setattr(scans, "_time_travel_distributed", distributed)
+    got = sorted(map(tuple, load_all()["q_scan_time_travel"].fn(spark, sf_dir).collect()))
+    assert dropped and fell_back
+    base, versions, _, _ = scans._snapshot_demo_table(spark, sf_dir, "q_scan_time_travel")
+    assert got == sorted(map(tuple, real_distributed(spark, base, versions).collect()))
+
+
 def test_snapshot_build_marker_reuses_and_invalidates(spark, sf_dir):
     """r12: re-invocation reuses the committed log (same versions, same
     files — no version drift from repeated commits); a fingerprint

@@ -424,3 +424,37 @@ def test_state_reader_matches_batch_and_metadata(spark, sf_dir):
     assert row["operatorName"] == "stateStoreSave"
     assert row["numPartitions"] == 32
     assert row["minBatchId"] == 0 and row["maxBatchId"] >= row["minBatchId"]
+
+
+def test_tws_map_v1_processor_skips_null_event_type():
+    """A NULL event_type used to be counted under a None key, and
+    sorted() over the touched keys then raised TypeError. The v1
+    processor skips NULL keys, as the transformWithState path's pandas
+    groupby does."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from spark_ml_pipelines_example_spark.streaming.jobs import _per_type_v1
+
+    class State:
+        exists = False
+
+        def update(self, value):
+            self.exists, self.get = True, value
+
+    def batch(types, cents):
+        return pa.table(
+            {"event_type": pa.array(types, pa.string()), "cents": pa.array(cents, pa.int64())}
+        ).to_pandas()
+
+    first = batch(["a", None, "b", "a"], [1, 2, 3, 4])
+    state = State()
+    out = pd.concat(_per_type_v1()((7,), [first], state))
+    want = first.groupby("event_type")["cents"].agg(["count", "sum"])
+    assert out["event_type"].tolist() == want.index.tolist() == ["a", "b"]
+    assert out["n_events"].tolist() == want["count"].tolist() == [2, 1]
+    assert out["sum_cents"].tolist() == want["sum"].tolist() == [5, 3]
+    assert state.get == (["a", "b"], [2, 1], [5, 3])
+    # a batch holding only NULL keys emits nothing and leaves the totals
+    assert list(_per_type_v1()((7,), [batch([None, None], [5, 6])], state)) == []
+    assert state.get == (["a", "b"], [2, 1], [5, 3])

@@ -9,9 +9,9 @@ sorts the pandas frame by all columns — which raises ``unhashable type:
 does the same to catch harness-incompatible schemas before the driver does.
 
 Usage: python tools/driver_sim.py [N | q_a,q_b,... | --tail [N]] [sf_dir]
-  --tail [N]  auto-pick the first N (default 50) names with no valid hard
-              driver row (rotation order minus CORRECTNESS_r* rows) — the
-              exact tail the next driver window will read.
+  --tail [N]  the first N (default 50) names of the oracle-window order
+              (queries/oracle_window.py) — the exact names the next driver
+              window will read.
 """
 
 from __future__ import annotations
@@ -94,29 +94,15 @@ def main() -> None:
     tail_mode = False
     argv = list(sys.argv[1:])
     if argv and argv[0] == "--tail":
-        # VERDICT r5 #5: pick the N never-checked names automatically
-        # (rotation order minus valid CORRECTNESS_r* rows) so the builder
-        # selfcheck fronts exactly the tail the next driver window reads.
+        # the first N names of the oracle-window order: exactly the names
+        # the next driver window reads
         argv.pop(0)
         tail_mode = True
         n = int(argv.pop(0)) if argv and argv[0].isdigit() else 50
-        from spark_ml_pipelines_example_spark.queries.registry import (
-            _driver_checked_queries,
-            _force_recheck_pending,
-            _recert_rotation_names,
-            load_all,
-        )
+        from spark_ml_pipelines_example_spark.queries import oracle_window
+        from spark_ml_pipelines_example_spark.queries.registry import load_all
 
-        reg = load_all()
-        # subtract the re-certification rotation too (round 10+): the
-        # window the driver reads = pins + newcomers + oldest-vintage
-        # recert names, and the pre-run must front exactly that set
-        checked = (
-            _driver_checked_queries()
-            - _force_recheck_pending()
-            - set(_recert_rotation_names())
-        )
-        only = [name for name in reg if name not in checked][:n]
+        only = list(oracle_window.order(load_all()))[:n]
         print(f"--tail {n}: {len(only)} window names selected", flush=True)
     # ADVICE r6 #3: a q_ list after --tail must not silently replace the
     # tail selection, and sf_dir is detected by being a directory, not by

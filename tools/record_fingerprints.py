@@ -1,88 +1,58 @@
 #!/usr/bin/env python
-"""Round-close ledger step: refresh tools/checked_fingerprints.json.
+"""Round-close ledger step: refresh tools/oracle_ledger.json.
 
-The rotation in queries/registry.py treats a driver correctness row as
-valid only while the oracle it certified is the oracle the registry
-declares today. This tool records, for every query with a GOOD SQL-class
-row in any committed CORRECTNESS_r*.json, the md5 fingerprint of the
-oracle as it stands NOW.
+The oracle-window order (queries/oracle_window.py) compares each query's
+current code closure with the closure its last green driver row checked.
+This tool takes the newest committed CORRECTNESS_rNN.json and, for every
+query with a green row in it, records round NN and the query's closure as
+it stands NOW.
 
-Run it exactly at round close — i.e. right after the external driver has
-hash-checked the current code — so "current fingerprint" and
-"fingerprint as checked" coincide for the fresh window. Existing entries
-for queries NOT in the latest artifact are left untouched (their oracle
-may have drifted since their row; overwriting would forge freshness).
+Run it exactly at round close, right after the external driver has
+checked the current code, so "current closure" and "closure as checked"
+coincide. Entries for queries without a green row in the newest artifact
+are left untouched: their code may have changed since their row, and
+overwriting them would forge freshness.
 
-Usage: python tools/record_fingerprints.py [--bootstrap]
-  --bootstrap  also record fingerprints for good rows from OLDER
-               artifacts that have no entry yet (used once, round 4, on
-               the strength of the r3 selfcheck: 307/307 current oracles
-               hash-match at sf0.01 and sf0.1, judge-sampled 20/20).
+Usage: python tools/record_fingerprints.py
 """
 from __future__ import annotations
 
+import collections
 import json
+import re
 import sys
+import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from spark_ml_pipelines_example_spark.queries.registry import (  # noqa: E402
-    REGISTRY,
-    load_all,
-    oracle_fingerprint,
-)
-
-SNAPSHOT = ROOT / "tools" / "checked_fingerprints.json"
-
-
-def good_sql_names(artifact: dict) -> set[str]:
-    return {
-        n
-        for n, row in artifact.items()
-        if isinstance(row, dict)
-        and row.get("hash_match") is True
-        and row.get("err") is None
-    }
+from spark_ml_pipelines_example_spark.queries import oracle_window  # noqa: E402
+from spark_ml_pipelines_example_spark.queries.registry import load_all  # noqa: E402
 
 
 def main() -> None:
-    bootstrap = "--bootstrap" in sys.argv
-    load_all()
-
-    artifacts = sorted(ROOT.glob("CORRECTNESS_r*.json"))
+    artifacts = sorted(ROOT.glob("CORRECTNESS_r*.json"))  # rNN is zero-padded
     if not artifacts:
         print("no CORRECTNESS_r*.json artifacts; nothing to record")
         return
+    newest = artifacts[-1]
+    rnd = int(re.search(r"r(\d+)", newest.name).group(1))
+    registry = load_all()
+    ledger = oracle_window.load_ledger()
 
-    try:
-        snapshot: dict[str, str] = dict(json.loads(SNAPSHOT.read_text()))
-    except (OSError, ValueError):
-        snapshot = {}
+    t0 = time.perf_counter()
+    current = oracle_window.closures(registry)
+    walk_s = time.perf_counter() - t0
+    updated = oracle_window.record(ledger, current, json.loads(newest.read_text()), rnd)
+    oracle_window.write_ledger(ledger)
 
-    latest = good_sql_names(json.loads(artifacts[-1].read_text()))
-    older: set[str] = set()
-    for p in artifacts[:-1]:
-        older |= good_sql_names(json.loads(p.read_text()))
-
-    to_record = set(latest)
-    if bootstrap:
-        to_record |= {n for n in older if n not in snapshot}
-
-    updated = 0
-    for name in sorted(to_record):
-        spec = REGISTRY.get(name)
-        if spec is None or spec.oracle is None:
-            continue
-        fp = oracle_fingerprint(spec)
-        if snapshot.get(name) != fp:
-            snapshot[name] = fp
-            updated += 1
-
-    SNAPSHOT.write_text(json.dumps(snapshot, indent=1, sort_keys=True) + "\n")
-    print(f"recorded {updated} fingerprint(s); snapshot now {len(snapshot)} entries")
-
+    tiers = collections.Counter(t for t, _ in oracle_window.status(current, ledger).values())
+    print(
+        f"{newest.name}: {updated} ledger entries updated, {len(ledger)} in total; "
+        f"tier 0 {tiers[oracle_window.TIER0]}, stale {tiers[oracle_window.STALE]}, "
+        f"fresh {tiers[oracle_window.FRESH]} (closure walk {walk_s:.1f} s)"
+    )
 
 if __name__ == "__main__":
     main()
